@@ -223,6 +223,22 @@ def adaptive_n_planes(
     return max(min_planes, min(max_planes, raw))
 
 
+def _lsh_geometry(
+    corpus: DataFrame, vec_col: str, n_planes: int | None, **sizing
+) -> tuple[int, int]:
+    """``(n_planes, dim)`` for an LSH build over ``corpus``. A pinned
+    ``n_planes`` needs only the vector width, which a ``limit(1)``
+    probe reads from one row; otherwise one fused job returns count
+    and width (r14 §7.3) and :func:`adaptive_n_planes` sizes the code
+    with ``sizing``."""
+    if n_planes is not None:
+        return n_planes, len(corpus.select(vec_col).limit(1).first()[0])
+    head = corpus.select(
+        F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v0")
+    ).first()
+    return adaptive_n_planes(int(head["n"]), **sizing), len(head["v0"])
+
+
 def hyperplane_buckets(
     n_planes: int = 4, dim: int = 64, n_tables: int = 8, seed: int = 42
 ):
@@ -272,12 +288,7 @@ def lsh_cosine_topk(
     count via :func:`adaptive_n_planes` — identical to the historical
     4-plane fixed geometry at every oracle scale (the floor), log-
     scaling past it. Pass an int to pin it explicitly."""
-    head = corpus.select(
-        F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v0")
-    ).first()  # one job for dim + count (r14 §7.3), not two
-    dim = len(head["v0"])
-    if n_planes is None:
-        n_planes = adaptive_n_planes(int(head["n"]))
+    n_planes, dim = _lsh_geometry(corpus, vec_col, n_planes)
     buckets = hyperplane_buckets(n_planes, dim, n_tables, seed)
     c = corpus.select(
         F.col(id_col).alias("nid"),
@@ -386,12 +397,8 @@ def knn_graph_lsh(
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    head = corpus.select(
-        F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v0")
-    ).first()  # one job for dim + count (r14 §7.3), not two
-    if n_planes is None:
-        n_planes = adaptive_n_planes(int(head["n"]), target_bucket_rows=128)
-    bkts = hyperplane_buckets(n_planes, len(head["v0"]), n_tables, seed)
+    n_planes, dim = _lsh_geometry(corpus, vec_col, n_planes, target_bucket_rows=128)
+    bkts = hyperplane_buckets(n_planes, dim, n_tables, seed)
     tagged = _materialize(  # feeds the occupancy agg AND the groups
         corpus.select(
             F.col(id_col).alias("src"),
@@ -673,14 +680,9 @@ def embedding_near_duplicates(
     sort-merge join stays AQE-skew-splittable instead of running the
     hot bucket as one straggler task; at driver scales the join is a
     broadcast and the exchange never plans at all."""
-    head = corpus.select(
-        F.count(F.lit(1)).alias("n"), F.first(vec_col).alias("v0")
-    ).first()
-    dim = len(head["v0"])
-    if n_planes is None:
-        n_planes = adaptive_n_planes(
-            int(head["n"]), target_bucket_rows=16, min_planes=12, max_planes=30
-        )
+    n_planes, dim = _lsh_geometry(
+        corpus, vec_col, n_planes, target_bucket_rows=16, min_planes=12, max_planes=30
+    )
     buckets = hyperplane_buckets(n_planes, dim, n_tables, seed)
     tagged = (
         corpus.select(

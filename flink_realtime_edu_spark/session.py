@@ -8,8 +8,14 @@ tests / bench, mirroring the driver's ``local[$SPARK_GRAFT_CPUS]``
 setup.
 
 Scale posture (SURVEY.md §4.4): AQE is left on so shuffle partition
-counts coalesce/split at runtime on a real cluster; the static
-``spark.sql.shuffle.partitions`` is only the pre-AQE ceiling.
+counts coalesce/split at runtime on a real cluster; for batch stages
+the static ``spark.sql.shuffle.partitions`` is only the pre-AQE
+ceiling. :func:`get_spark` defaults it to the session's core count.
+Stateful streaming operators (aggregation, dedup, applyInPandasWithState)
+get no AQE coalescing, so for them this number IS the per-micro-batch
+task count, and each one pays a state-store commit every batch. A
+streaming checkpoint freezes the count it started with: Spark restores
+it from the offset log on restart, whatever the session now says.
 """
 
 from __future__ import annotations
@@ -159,18 +165,20 @@ def get_spark(
     """Local session mirroring the driver's environment.
 
     ``SPARK_GRAFT_CPUS`` selects local parallelism (default all cores).
-    Shuffle partitions default to the core count: at test scale every
-    partition fits in memory; at cluster scale AQE re-coalesces anyway.
+    ``shuffle_partitions`` defaults to the session's core count
+    (``defaultParallelism``): batch stages re-coalesce under AQE
+    anyway, and stateful streaming operators, which AQE does not
+    touch, then run one state partition per core instead of paying a
+    task and a state-store commit per idle partition each micro-batch.
+    A query restarted from a checkpoint keeps the count it was started
+    with.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     import tempfile
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
@@ -178,4 +186,8 @@ def get_spark(
         # warehouse out of the repo (harmless if session pre-exists).
         .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark-wh-"))
     )
-    return configure(builder.getOrCreate())
+    spark = builder.getOrCreate()
+    if shuffle_partitions is None:
+        shuffle_partitions = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return configure(spark)

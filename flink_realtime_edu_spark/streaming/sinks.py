@@ -167,8 +167,14 @@ def upsert_latest_by_key(
       merges and rewrites ONLY the buckets its keys touch (dynamic
       partition overwrite). Per-batch cost is O(touched buckets), so
       with K sized such that a bucket ≈ a few hundred MB, a trickle
-      of updates no longer rewrites terabytes. Read the table back
-      with :func:`read_upsert_table` (drops the bucket column).
+      of updates no longer rewrites terabytes. The merge is clustered
+      on the bucket column (one exchange, which the latest-per-key
+      window reuses), so every touched bucket is rewritten as exactly
+      ONE parquet file per batch — the file count stays at ≤ K however
+      many shuffle partitions the session has, and a bucket left with
+      several files by an older layout is compacted on its next touch.
+      Read the table back with :func:`read_upsert_table` (drops the
+      bucket column).
 
     At warehouse scale the same function body targets an ACID table
     (MERGE INTO on Delta/Iceberg) or a ClickHouse JDBC batch insert;
@@ -177,8 +183,8 @@ def upsert_latest_by_key(
     and restarts are safe (re-merging a replayed batch is a no-op).
     """
 
-    def latest_per_key(merged: DataFrame) -> DataFrame:
-        w = Window.partitionBy(*key_cols).orderBy(F.col(version_col).desc())
+    def latest_per_key(merged: DataFrame, *cluster_cols: str) -> DataFrame:
+        w = Window.partitionBy(*cluster_cols, *key_cols).orderBy(F.col(version_col).desc())
         return (
             merged.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
@@ -213,9 +219,14 @@ def upsert_latest_by_key(
             touched = [r[0] for r in batch.select(BUCKET_COL).distinct().collect()]
             existing = read_buckets(spark, target_dir, touched)
             merged = batch if existing is None else existing.unionByName(batch)
+            # Cluster on the bucket: each bucket lands in one task, so
+            # the write below emits one file per bucket. The bucket is
+            # a function of the keys, so adding it to the window's
+            # partitioning changes no result and reuses this exchange.
+            merged = merged.repartition(BUCKET_COL)
             # Materialize before overwriting the very partitions being
             # read (the bucketed form of the flat path's tmp-dir dance).
-            latest = latest_per_key(merged).localCheckpoint(eager=True)
+            latest = latest_per_key(merged, BUCKET_COL).localCheckpoint(eager=True)
             overwrite_buckets(latest, target_dir)
         finally:
             batch.unpersist()

@@ -170,13 +170,13 @@ def test_embedding_near_dup_finds_planted_duplicates(spark, sf_dir):
 
 
 def test_embedding_near_dup_group_scoring_matches_pair_join(spark, sf_dir):
-    """The r14 in-group scorer (bucket applyInPandas, strictly-upper
-    triangle) must return EXACTLY the rows of the r13 shape it
-    replaced — bucket self-join on bkt, id_a < id_b pair-dedup, then
-    cosine_pair_udf + threshold filter. Threshold 0.0 keeps every
-    candidate pair, so the equality covers scores, not just the
-    survivor set; planted near-dup clusters force multi-row buckets
-    in every table."""
+    """embedding_near_duplicates must return EXACTLY the rows of the
+    plain pair-join form written out below — bucket self-join on bkt,
+    id_a < id_b pair-dedup, then cosine_pair_udf + threshold filter —
+    so its materialized tagging and planner-chosen exchange change no
+    pair and no score. Threshold 0.0 keeps every candidate pair, so
+    the equality covers scores, not just the survivor set; planted
+    near-dup clusters force multi-row buckets in every table."""
     from flink_realtime_edu_spark.operators.similarity import (
         adaptive_n_planes,
         cosine_pair_udf,
@@ -204,7 +204,7 @@ def test_embedding_near_dup_group_scoring_matches_pair_join(spark, sf_dir):
         for r in embedding_near_duplicates(corpus, threshold=0.0).collect()
     }
 
-    # the replaced r13 shape, inlined as the reference
+    # the plain pair-join form, inlined as the reference
     n_planes = adaptive_n_planes(
         corpus.count(), target_bucket_rows=16, min_planes=12, max_planes=30
     )

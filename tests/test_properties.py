@@ -218,6 +218,7 @@ def test_abandoned_state_fn_matches_antijoin(evs, cuts, data):
         )
         # shuffle within the batch: arrival order is arbitrary
         pdf = pdf.sample(frac=1, random_state=data.draw(st.integers(0, 10)))
+        state.timeout = None  # Spark clears the group's timer on every call
         for out in fn((7,), iter([pdf]), state):
             emitted.extend(int(t) for t in out["click_ts_ms"])
         max_seen = max([e[1] for e in batch] + ([max_seen] if max_seen is not None else []))
@@ -510,6 +511,7 @@ def test_cep_timeout_state_fn_matches_batch_cut(evs, cuts, data):
             }
         )
         pdf = pdf.sample(frac=1, random_state=data.draw(st.integers(0, 10)))
+        state.timeout = None  # Spark clears the group's timer on every call
         for out in fn((7,), iter([pdf]), state):
             emitted.extend(
                 (int(a), int(b), int(m), bool(to))

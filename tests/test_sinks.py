@@ -146,6 +146,74 @@ def test_bucketed_upsert_converges_and_rewrites_only_touched_buckets(spark, tmp_
     assert any(p not in before or after[p] != before[p] for p in after)
 
 
+def test_bucketed_upsert_writes_one_file_per_touched_bucket(spark, tmp_path):
+    """Driven as the stream drives it — foreachBatch behind a keyed
+    streaming aggregate, whose frames arrive spread over the session's
+    shuffle partitions — every micro-batch rewrites each bucket it
+    touches as exactly ONE parquet file, including a bucket that an
+    older layout left holding several files, and the table stays the
+    latest version per key."""
+    from flink_realtime_edu_spark.streaming.sinks import (
+        BUCKET_COL,
+        check_bucket_layout,
+        key_bucket_col,
+        read_upsert_table,
+        run_to_completion,
+        upsert_latest_by_key,
+    )
+
+    n_buckets = 4
+    src, target = tmp_path / "src", tmp_path / "store"
+    ckpt = str(tmp_path / "ckpt")
+
+    def bucket_of(keys):
+        frame = spark.createDataFrame([(k,) for k in keys], "k long")
+        return {r[0]: r[1] for r in frame.select("k", key_bucket_col(["k"], n_buckets)).collect()}
+
+    # The old layout: one bucket already split over three files, each
+    # holding an older version of a key the stream will update.
+    buckets = bucket_of(range(40))
+    crowded = buckets[0]
+    old_rows = [(k, 0) for k in range(40) if buckets[k] == crowded][:3]
+    check_bucket_layout(str(target), n_buckets)
+    for row in old_rows:
+        (
+            spark.createDataFrame([row], "k long, v long")
+            .withColumn(BUCKET_COL, key_bucket_col(["k"], n_buckets))
+            .write.mode("append").partitionBy(BUCKET_COL).parquet(str(target))
+        )
+    assert len(list((target / f"{BUCKET_COL}={crowded}").glob("*.parquet"))) == 3
+    latest = dict(old_rows)
+
+    batches = [
+        [(k, 1 + k % 3) for k in range(40)],
+        [(k, 10) for k in range(0, 60, 4)] + [(k, 0) for k in range(1, 40, 5)],
+    ]
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, "k long, v long").write.parquet(str(src / f"part-{i}"))
+        agg = (
+            spark.readStream.schema("k long, v long")
+            .parquet(str(src / f"part-{i}"))
+            .groupBy("k")
+            .agg(F.max("v").alias("v"))
+        )
+        run_to_completion(
+            agg.writeStream.outputMode("update")
+            .foreachBatch(upsert_latest_by_key(str(target), ["k"], "v", n_buckets=n_buckets))
+            .option("checkpointLocation", f"{ckpt}-{i}")
+            .start()
+        )
+        for k, v in rows:
+            latest[k] = max(v, latest.get(k, v))
+        touched = set(bucket_of([k for k, _ in rows]).values())
+        assert crowded in touched
+        for b in touched:
+            files = list((target / f"{BUCKET_COL}={b}").glob("*.parquet"))
+            assert len(files) == 1, f"batch {i}: bucket {b} holds {len(files)} files"
+        got = {r.k: r.v for r in read_upsert_table(spark, str(target)).collect()}
+        assert got == latest, f"batch {i}: table is not latest-per-key"
+
+
 def test_bucket_layout_metadata_rejects_mismatched_restart(spark, tmp_path):
     """ADVICE r3: n_buckets is persisted in a _n_buckets metadata file
     on first write; a writer restarted with a different bucket count

@@ -457,34 +457,25 @@ def test_transform_with_state_first_visit(spark, sf_dir, events_dir, tmp_path):
     )
 
 
-def test_layered_warehouse_pipeline_end_to_end(spark, sf_dir, tmp_path):
-    """The composed ODS→DWD→DWS→ADS pipeline (the reference's whole
-    architecture as one job): replay events in 4 micro-batches,
-    maintain the DWS table via the idempotent upsert sink, then the
-    ADS batch query over the maintained table must equal the same
-    layered computation done directly in batch."""
+DWS_KEYS = ["day_start", "event_type", "nation"]
+
+
+def _layered_dim(spark, sf_dir):
+    return (
+        load(spark, sf_dir, "customer")
+        .join(load(spark, sf_dir, "nation"), F.col("c_nationkey") == F.col("n_nationkey"))
+        .select(F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation"))
+    )
+
+
+def _start_layered(spark, src, dim, sink, ckpt):
+    """layered_warehouse_stream over the ODS dir `src` (one file per
+    micro-batch) into the foreachBatch `sink`, checkpointed at `ckpt`."""
     from flink_realtime_edu_spark.streaming.jobs import (
-        ads_top_segments,
         layered_warehouse_stream,
         load_events_stream,
     )
 
-    # Split events into 4 files so the file source replays them as
-    # separate micro-batches (cross-batch agg state + upserts).
-    src = tmp_path / "ods"
-    load(spark, sf_dir, "events").withColumn(
-        "ts", F.unix_micros("ts") * 1000  # back to the on-disk nanos shape
-    ).repartition(4).write.parquet(str(src))
-
-    dim = (
-        load(spark, sf_dir, "customer")
-        .join(
-            load(spark, sf_dir, "nation"),
-            F.col("c_nationkey") == F.col("n_nationkey"),
-        )
-        .select(F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation"))
-    )
-    dws_dir = str(tmp_path / "dws")
     # Watermark must cover the replay's out-of-orderness (30 days of
     # history in unsorted micro-batches) or late rows drop (T4).
     dws = layered_warehouse_stream(
@@ -492,25 +483,22 @@ def test_layered_warehouse_pipeline_end_to_end(spark, sf_dir, tmp_path):
         dim,
         watermark="60 days",
     )
-    q = (
+    return (
         dws.writeStream.outputMode("update")
-        .foreachBatch(upsert_latest_by_key(dws_dir, ["day_start", "event_type", "nation"], "n_events"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
         .start()
     )
-    run_to_completion(q)
 
-    # Batch re-expression of the same layering over the same data.
+
+def _batch_layering(spark, sf_dir, dim):
+    """The DWS rows layered_warehouse_stream must converge to, in batch."""
     ev = load(spark, sf_dir, "events")
-    batch_dwd = (
+    return (
         ev.withColumn("k", F.from_json("props", "k INT").getField("k"))
         .filter(F.col("event_type").isin("click", "view", "purchase"))
         .join(dim, on="user_id", how="left")
-    )
-    batch_dws = (
-        batch_dwd.groupBy(
-            F.window("ts", "1 day").alias("w"), "event_type", "nation"
-        )
+        .groupBy(F.window("ts", "1 day").alias("w"), "event_type", "nation")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum(F.col("value").cast("decimal(30,8)")).cast("double"), 2).alias("sum_value"),
@@ -521,6 +509,32 @@ def test_layered_warehouse_pipeline_end_to_end(spark, sf_dir, tmp_path):
             "event_type", "nation", "n_events", "sum_value", "n_with_props",
         )
     )
+
+
+def test_layered_warehouse_pipeline_end_to_end(spark, sf_dir, tmp_path):
+    """The composed ODS→DWD→DWS→ADS pipeline (the reference's whole
+    architecture as one job): replay events in 4 micro-batches,
+    maintain the DWS table via the idempotent upsert sink, then the
+    ADS batch query over the maintained table must equal the same
+    layered computation done directly in batch."""
+    from flink_realtime_edu_spark.streaming.jobs import ads_top_segments
+
+    # Split events into 4 files so the file source replays them as
+    # separate micro-batches (cross-batch agg state + upserts).
+    src = tmp_path / "ods"
+    load(spark, sf_dir, "events").withColumn(
+        "ts", F.unix_micros("ts") * 1000  # back to the on-disk nanos shape
+    ).repartition(4).write.parquet(str(src))
+
+    dim = _layered_dim(spark, sf_dir)
+    dws_dir = str(tmp_path / "dws")
+    q = _start_layered(
+        spark, src, dim, upsert_latest_by_key(dws_dir, DWS_KEYS, "n_events"), str(tmp_path / "ckpt")
+    )
+    run_to_completion(q)
+
+    # Batch re-expression of the same layering over the same data.
+    batch_dws = _batch_layering(spark, sf_dir, dim)
     got_dws = spark.read.parquet(dws_dir)
     assert _rows(got_dws) == _rows(batch_dws)
     # ADS layer: serving query over the maintained table == over batch.
@@ -570,64 +584,68 @@ def test_layered_pipeline_survives_restart_from_checkpoint(spark, sf_dir, tmp_pa
     recovered from the state store, and the idempotent upsert sink
     converges to exactly the batch answer — the reference's
     checkpoint/restore + ReplacingMergeTree end-to-end guarantee."""
-    from flink_realtime_edu_spark.streaming.jobs import (
-        layered_warehouse_stream,
-        load_events_stream,
-    )
-
     src = tmp_path / "ods"
     load(spark, sf_dir, "events").withColumn(
         "ts", F.unix_micros("ts") * 1000
     ).repartition(4).write.parquet(str(src))
-    dim = (
-        load(spark, sf_dir, "customer")
-        .join(load(spark, sf_dir, "nation"), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select(F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation"))
-    )
+    dim = _layered_dim(spark, sf_dir)
     dws_dir, ckpt = str(tmp_path / "dws"), str(tmp_path / "ckpt")
+    sink = upsert_latest_by_key(dws_dir, DWS_KEYS, "n_events")
 
-    def start():
-        dws = layered_warehouse_stream(
-            load_events_stream(spark, str(src), max_files_per_trigger=1),
-            dim,
-            watermark="60 days",
-        )
-        return (
-            dws.writeStream.outputMode("update")
-            .foreachBatch(
-                upsert_latest_by_key(dws_dir, ["day_start", "event_type", "nation"], "n_events")
-            )
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    q1 = start()
+    q1 = _start_layered(spark, src, dim, sink, ckpt)
     # let ≥2 micro-batches commit, then kill mid-stream; bounded wait
     # that re-raises if the query dies (a bare poll loop hangs forever)
     await_progress(q1, min_batch_id=1)
     q1.stop()
     q1.awaitTermination()
 
-    q2 = start()  # same checkpoint → resumes from committed offsets
+    q2 = _start_layered(spark, src, dim, sink, ckpt)  # same checkpoint → resumes from committed offsets
     run_to_completion(q2)
 
-    ev = load(spark, sf_dir, "events")
-    batch_dws = (
-        ev.withColumn("k", F.from_json("props", "k INT").getField("k"))
-        .filter(F.col("event_type").isin("click", "view", "purchase"))
-        .join(dim, on="user_id", how="left")
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type", "nation")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(30,8)")).cast("double"), 2).alias("sum_value"),
-            F.count("k").alias("n_with_props"),
-        )
-        .select(
-            F.col("w.start").alias("day_start"),
-            "event_type", "nation", "n_events", "sum_value", "n_with_props",
-        )
-    )
-    assert _rows(spark.read.parquet(dws_dir)) == _rows(batch_dws)
+    assert _rows(spark.read.parquet(dws_dir)) == _rows(_batch_layering(spark, sf_dir, dim))
+
+
+def test_layered_pipeline_restart_keeps_checkpointed_partition_count(spark, sf_dir, tmp_path):
+    """A stateful query's shuffle-partition count is frozen into its
+    checkpoint: the layered job started while the session said 3
+    partitions still runs its state store on 3 after a restart under
+    the session's own count (Spark reads the count back from the
+    offset log — a changed default cannot orphan existing state), and
+    the bucketed DWS store converges to the batch layering."""
+    from flink_realtime_edu_spark.streaming.sinks import read_upsert_table
+
+    ev = load(spark, sf_dir, "events").withColumn("ts", F.unix_micros("ts") * 1000)
+    # Two landings split on ts, so the second holds no late rows.
+    mid = ev.agg(((F.min("ts") + F.max("ts")) / 2).cast("long")).first()[0]
+    src = tmp_path / "ods"
+    dim = _layered_dim(spark, sf_dir)
+    dws_dir, ckpt = str(tmp_path / "dws"), str(tmp_path / "ckpt")
+    sink = upsert_latest_by_key(dws_dir, DWS_KEYS, "n_events", n_buckets=4)
+
+    def state_partitions(query):
+        return {
+            op["numShufflePartitions"]
+            for p in query.recentProgress
+            for op in p.get("stateOperators") or []
+        }
+
+    ev.filter(F.col("ts") < mid).repartition(2).write.parquet(str(src))
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        q1 = _start_layered(spark, src, dim, sink, ckpt)
+        run_to_completion(q1)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    assert saved != "3" and state_partitions(q1) == {3}
+
+    ev.filter(F.col("ts") >= mid).repartition(2).write.mode("append").parquet(str(src))
+    q2 = _start_layered(spark, src, dim, sink, ckpt)
+    run_to_completion(q2)
+    assert state_partitions(q2) == {3}
+
+    got = read_upsert_table(spark, dws_dir)
+    assert _rows(got) == _rows(_batch_layering(spark, sf_dir, dim))
 
 
 def test_ts_shape_drift_guard(spark, sf_dir, tmp_path):
